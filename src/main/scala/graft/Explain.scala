@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan inspection tool: `runMain graft.Explain [query ...]` prints the
   * formatted physical plan of each named query (default: a scan-heavy, a
@@ -10,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = GraftSession.build(4, "graft-explain")
+    val spark = GraftSession.fromEnv("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq

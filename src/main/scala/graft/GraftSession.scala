@@ -19,12 +19,16 @@ import org.apache.spark.sql.SparkSession
   *    shuffle-read network off the bill.
   *  - UTC session timezone: timestamp semantics identical across engines
   *    (the DuckDB oracle compares raw values).
+  *
+  * Every entry point builds its session here — the CLI, Verify, Bench, the
+  * tools and the test suite — so all of them run the configuration the
+  * benchmarks measure.
   */
 object GraftSession {
 
-  def build(cores: Int, appName: String = "graft"): SparkSession = {
+  def build(cores: Int, appName: String = "graft", master: Option[String] = None): SparkSession = {
     val s = SparkSession.builder()
-      .master(s"local[$cores]")
+      .master(master.getOrElse(s"local[$cores]"))
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
@@ -50,7 +54,10 @@ object GraftSession {
     s
   }
 
-  /** Cores from SPARK_GRAFT_CPUS, defaulting to the target local[32]. */
+  /** The deployment's settings: cores from SPARK_GRAFT_CPUS (default: the
+    * target local[32]) and the master from SPARK_MASTER (default
+    * `local[cores]`; set it to run on a cluster).
+    */
   def fromEnv(appName: String = "graft"): SparkSession =
-    build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName)
+    build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName, sys.env.get("SPARK_MASTER"))
 }

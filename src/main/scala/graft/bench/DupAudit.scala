@@ -22,7 +22,7 @@ object DupAudit {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val minNodes = args.headOption.map(_.toInt).getOrElse(4)
     val prefixes = args.drop(1).toSeq
-    val spark = GraftSession.build(4, "graft-dupaudit")
+    val spark = GraftSession.fromEnv("graft-dupaudit")
     spark.sparkContext.setLogLevel("ERROR")
     val selected =
       if (prefixes.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)

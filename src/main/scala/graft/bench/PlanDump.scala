@@ -21,7 +21,7 @@ object PlanDump {
     val names = if (args.drop(1).toSeq == Seq("all")) SparkEntry.queries.keys.toSeq
       else args.drop(1).toSeq
     Files.createDirectories(outDir)
-    val spark = GraftSession.build(4, "graft-plandump")
+    val spark = GraftSession.fromEnv("graft-plandump")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       try {

@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.streaming.{FileSlotRpc, RetryingSlotRpc, StreamingPipeline}
 
 /** Entry point mirroring the reference's `main()` flow (SURVEY §3):
@@ -13,9 +14,11 @@ import graft.streaming.{FileSlotRpc, RetryingSlotRpc, StreamingPipeline}
   *
   * Range defaulting matches `src/main.rs:90-98`: start = tip - 30,
   * end = tip - 20 (the 20-slot finality lag), `--num-blocks` arithmetic
-  * from `src/cli.rs:75-83`. Retries are delegated to Spark
-  * (`spark.task.maxFailures`) plus the idempotent upsert sink — the
-  * engine-level equivalent of the reference's linear-backoff loops.
+  * from `src/cli.rs:75-83`. `--max-retries` / `--retry-delay` drive every
+  * RPC call — the tip probe, the source's slot listing and each executor's
+  * block reads — with the reference's linear backoff
+  * (`src/pipeline.rs:187-243`); a crash past them is replayed from the
+  * checkpoint into the idempotent upsert sink.
   */
 object Main {
 
@@ -31,22 +34,18 @@ object Main {
         val tablesDir = cfg.databaseUrl.getOrElse(
           sys.env.getOrElse("GRAFT_TABLES_DIR",
             sys.error("pass --database-url <tables dir> or set GRAFT_TABLES_DIR")))
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .appName("block-data-fetcher")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.task.maxFailures", cfg.maxRetries.toString)
-          .getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        val spark = GraftSession.fromEnv("block-data-fetcher")
         try run(spark, cfg, blocksDir, tablesDir)
         finally spark.stop()
     }
 
+  /** The RPC client behind the tip probe, retrying as the CLI's retry flags say. */
+  def slotRpc(cfg: Config, blocksDir: String): RetryingSlotRpc =
+    new RetryingSlotRpc(new FileSlotRpc(blocksDir), cfg.maxRetries, cfg.retryDelay * 1000L)
+
   def run(spark: SparkSession, cfg: Config, blocksDir: String, tablesDir: String): Unit = {
     val finalityLag = 20L
-    val rpc = new RetryingSlotRpc(new FileSlotRpc(blocksDir))
+    val rpc = slotRpc(cfg, blocksDir)
     val tip = rpc.tipSlot().getOrElse(sys.error(s"no <slot>.json blocks found under $blocksDir"))
 
     // main.rs:90-98 range resolution against the tip: an explicit
@@ -70,7 +69,9 @@ object Main {
       finalityLag = math.max(tip - end, 0L), // offer exactly [.., end]
       maxSlotsPerTrigger = Some(cfg.batchSize.toLong),
       trigger = Trigger.AvailableNow(),
-      startSlot = Some(start)
+      startSlot = Some(start),
+      maxRetries = rpc.maxRetries,
+      retryDelayMs = rpc.delayMs
     ).awaitTermination()
 
     if (cfg.continuous) {
@@ -79,7 +80,9 @@ object Main {
         spark, blocksDir, tablesDir, s"$tablesDir/_checkpoint",
         finalityLag = finalityLag,
         maxSlotsPerTrigger = Some(cfg.batchSize.toLong),
-        trigger = Trigger.ProcessingTime(cfg.interval * 1000L))
+        trigger = Trigger.ProcessingTime(cfg.interval * 1000L),
+        maxRetries = rpc.maxRetries,
+        retryDelayMs = rpc.delayMs)
       q.awaitTermination()
     }
   }

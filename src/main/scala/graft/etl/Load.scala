@@ -1,6 +1,7 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,9 +21,13 @@ object Load {
     * `versionCol` (ties broken arbitrarily-but-deterministically by
     * preferring the incoming batch, which the caller encodes in versionCol).
     */
-  def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
+  def upsert(existing: DataFrame, incoming: DataFrame, keys: Seq[String], versionCol: String): DataFrame =
+    latestPerKey(existing.unionByName(incoming), keys, versionCol)
+
+  /** One row per key: the one with the highest `versionCol`. */
+  private def latestPerKey(rows: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(col(versionCol).desc)
-    existing.unionByName(incoming, allowMissingColumns = false)
+    rows
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
@@ -70,23 +75,12 @@ object Load {
   /** Incremental partitioned upsert — the scale-safe form of `upsert` for a
     * continuously-loaded table. The table is laid out as one directory per
     * `bucketCol` value (a slot-range bucket); a micro-batch then only
-    *
-    *   1. reads the partitions its rows touch (partition-pruned scan),
-    *   2. window-dedups union(existing-slice, incoming) on the upsert key,
-    *   3. atomically swaps just those partition directories (stage + rename).
-    *
-    * Cost per batch is O(touched partitions), not O(table) — the parquet
-    * analog of the reference's per-row `ON CONFLICT DO UPDATE`
-    * (load.rs:185-204), where each conflict touches one B-tree page, not the
-    * relation. Untouched partition directories are never rewritten (their
-    * files stay byte-identical). Each touched bucket swaps via old->aside,
-    * staged->live, drop-aside renames (the compactBucket pattern), so the
-    * bucket's prior contents are on disk at every step — a crash mid-swap
-    * leaves either the old or the new directory live (or the old
-    * recoverable from the aside), and checkpoint replay of the batch then
-    * converges via LWW dedup (ST5). A plain delete-then-rename would have
-    * a window where rows absent from the current batch are lost for good,
-    * because replay only re-runs the last micro-batch, not history.
+    * rewrites the buckets its rows touch ([[rewriteBuckets]]). Cost per
+    * batch is O(touched partitions), not O(table) — the parquet analog of
+    * the reference's per-row `ON CONFLICT DO UPDATE` (load.rs:185-204),
+    * where each conflict touches one B-tree page, not the relation.
+    * Untouched partition directories are never rewritten (their files stay
+    * byte-identical).
     *
     * `incoming` must already carry `bucketCol` (derivable from the key) and
     * `versionCol`. Requires every duplicate of a key to land in the same
@@ -98,51 +92,9 @@ object Load {
       path: String,
       keys: Seq[String],
       versionCol: String,
-      bucketCol: String): Unit = {
-    val spark = incoming.sparkSession
-    val touched: Seq[Long] =
-      incoming.select(col(bucketCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
-    if (touched.isEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    healInterruptedSwaps(fs, path, bucketCol)
-    val existing =
-      if (hasPartitions(fs, root, bucketCol))
-        spark.read.parquet(path)
-          // partition discovery types the bucket dir value as int; normalize
-          .withColumn(bucketCol, col(bucketCol).cast("long"))
-          .filter(col(bucketCol).isin(touched: _*)) // partition-pruned
-      else incoming.limit(0)
-    val merged = upsert(existing, incoming.withColumn(bucketCol, col(bucketCol).cast("long")), keys, versionCol)
-    // One task (=> one file) per touched bucket per batch; key-sorted within
-    // for parquet min/max skipping on point lookups.
-    val tmp = path + ".staging"
-    merged
-      .repartition(col(bucketCol))
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(bucketCol)
-      .parquet(tmp)
-    fs.mkdirs(root)
-    touched.foreach { b =>
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/$bucketCol=$b")
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$b")
-      if (fs.exists(src)) {
-        // Aside-rename (same pattern as compactBucket): never a moment
-        // where the bucket's prior rows exist nowhere on disk. The aside
-        // sits OUTSIDE the table root so partition discovery never sees it.
-        val aside = new org.apache.hadoop.fs.Path(s"$path.old-$b")
-        if (fs.exists(aside)) fs.delete(aside, true)
-        val hadOld = fs.exists(dst)
-        if (hadOld) fs.rename(dst, aside)
-        fs.rename(src, dst)
-        if (hadOld) fs.delete(aside, true)
-      }
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-  }
+      bucketCol: String): Unit =
+    rewriteBuckets(incoming.sparkSession, path, touchedBuckets(incoming, bucketCol),
+      keys, versionCol, bucketCol, Some(incoming.withColumn(bucketCol, col(bucketCol).cast("long"))))
 
   /** LSM-style upsert for high-frequency micro-batches: append the batch's
     * rows as NEW files in each touched bucket — O(batch) write cost,
@@ -169,12 +121,11 @@ object Load {
       bucketCol: String,
       compactThreshold: Int = 16): Unit = {
     val spark = incoming.sparkSession
-    val touched: Seq[Long] =
-      incoming.select(col(bucketCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq.sorted
+    val touched = touchedBuckets(incoming, bucketCol)
     if (touched.isEmpty) return
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    val fs = fileSystem(spark, path)
+    // Heal before appending: a live dir re-created by the append would make
+    // a lost swap's aside look stale, and the next heal would drop it.
     healInterruptedSwaps(fs, path, bucketCol)
     incoming
       .withColumn(bucketCol, col(bucketCol).cast("long"))
@@ -184,7 +135,7 @@ object Load {
       .partitionBy(bucketCol)
       .parquet(path)
     val overThreshold = touched.filter { b =>
-      val dir = new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$b")
+      val dir = new Path(s"$path/$bucketCol=$b")
       fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) > compactThreshold
     }
     // All over-threshold buckets compact in ONE Spark job (partition-pruned
@@ -193,71 +144,19 @@ object Load {
     compactBuckets(spark, path, overThreshold, keys, versionCol, bucketCol)
   }
 
-  /** Rewrite one bucket with duplicates resolved (LWW on `versionCol`),
-    * via staging + atomic dir swap. Only this bucket's files are touched.
-    */
-  def compactBucket(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      bucket: Long,
-      keys: Seq[String],
-      versionCol: String,
-      bucketCol: String): Unit =
-    compactBuckets(spark, path, Seq(bucket), keys, versionCol, bucketCol)
-
   /** Rewrite `buckets` with duplicates resolved (LWW on `versionCol`) in a
-    * single Spark job: one partition-pruned read over exactly those bucket
-    * directories, one shuffle on the bucket id (=> one output file per
-    * bucket), then a per-bucket aside-rename swap. Batching matters at
-    * scale — a micro-batch that trips N buckets over the threshold must
-    * not serialize N driver-side jobs.
+    * single Spark job ([[rewriteBuckets]] with no incoming rows). Batching
+    * matters at scale — a micro-batch that trips N buckets over the
+    * threshold must not serialize N driver-side jobs.
     */
   def compactBuckets(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       buckets: Seq[Long],
       keys: Seq[String],
       versionCol: String,
-      bucketCol: String): Unit = {
-    if (buckets.isEmpty) return
-    healInterruptedSwaps(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, bucketCol)
-    val slice = spark.read.parquet(path)
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-      .filter(col(bucketCol).isin(buckets: _*)) // partition-pruned
-    val deduped = upsert(slice.limit(0), slice, keys, versionCol)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    // Stage OUTSIDE the table root: a leftover dir under it would poison
-    // partition discovery ("slot_bucket=2.compacting" parses as a value).
-    val tmp = new org.apache.hadoop.fs.Path(s"$path.compact-staging")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    deduped
-      .repartition(col(bucketCol))
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(bucketCol)
-      .parquet(tmp.toString)
-    // Per bucket: old -> aside, staged -> live, drop aside. A crash between
-    // the renames leaves the bucket recoverable from the aside dir (same
-    // exposure as any rename-swap without a manifest; a table format's
-    // commit log is the production-grade answer).
-    buckets.foreach { b =>
-      val src = new org.apache.hadoop.fs.Path(s"$tmp/$bucketCol=$b")
-      if (fs.exists(src)) {
-        val dst = new org.apache.hadoop.fs.Path(s"$path/$bucketCol=$b")
-        val aside = new org.apache.hadoop.fs.Path(s"$path.old-$b")
-        if (fs.exists(aside)) fs.delete(aside, true)
-        val hadOld = fs.exists(dst)
-        if (hadOld) fs.rename(dst, aside)
-        fs.rename(src, dst)
-        if (hadOld) fs.delete(aside, true)
-      }
-    }
-    fs.delete(tmp, true)
-  }
+      bucketCol: String): Unit =
+    rewriteBuckets(spark, path, buckets, keys, versionCol, bucketCol, None)
 
   /** The read view over an append-mode table: one row per key, newest
     * version wins — what [[upsertPartitioned]] guarantees physically,
@@ -267,17 +166,102 @@ object Load {
     * value the writers used).
     */
   def readDeduped(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       keys: Seq[String],
       versionCol: String,
       bucketCol: String = "slot_bucket"): DataFrame = {
-    healInterruptedSwaps(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, bucketCol)
-    val raw = spark.read.parquet(path)
-    upsert(raw.limit(0), raw, keys, versionCol)
+    healInterruptedSwaps(fileSystem(spark, path), path, bucketCol)
+    latestPerKey(spark.read.parquet(path), keys, versionCol)
+  }
+
+  /** The landed rows of `buckets`, read after healing interrupted swaps —
+    * so a bucket a crash left aside reads as present, not as empty. The
+    * scan is partition-pruned to `buckets`; partition discovery types the
+    * bucket value as int, normalized here to long. None when no bucket is
+    * asked for or the table has no bucket directory yet (a bare or empty
+    * root, e.g. a crash between mkdirs and the first swap, reads as "no
+    * table yet", not as an unreadable parquet dir).
+    */
+  def readBuckets(
+      spark: SparkSession,
+      path: String,
+      buckets: Seq[Long],
+      bucketCol: String): Option[DataFrame] = {
+    if (buckets.isEmpty) return None
+    val fs = fileSystem(spark, path)
+    healInterruptedSwaps(fs, path, bucketCol)
+    val root = new Path(path)
+    val landed = fs.exists(root) &&
+      fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$bucketCol="))
+    if (!landed) None
+    else Some(spark.read.parquet(path)
+      .withColumn(bucketCol, col(bucketCol).cast("long"))
+      .filter(col(bucketCol).isin(buckets: _*)))
+  }
+
+  /** The one bucket commit protocol. `buckets` of the table at `path` are
+    * replaced by the LWW dedup of their landed rows ([[readBuckets]]) plus
+    * `incoming`:
+    *
+    *   1. heal interrupted swaps, then read only those buckets;
+    *   2. window-dedup on `keys`, one task (=> one file) per bucket, sorted
+    *      by key for parquet min/max skipping on point lookups;
+    *   3. stage the result OUTSIDE the table root — a leftover dir under it
+    *      would poison partition discovery;
+    *   4. swap each staged bucket in ([[swapBuckets]]).
+    */
+  private def rewriteBuckets(
+      spark: SparkSession,
+      path: String,
+      buckets: Seq[Long],
+      keys: Seq[String],
+      versionCol: String,
+      bucketCol: String,
+      incoming: Option[DataFrame]): Unit = {
+    if (buckets.isEmpty) return
+    val rows = (readBuckets(spark, path, buckets, bucketCol) ++ incoming).reduceOption(_.unionByName(_))
+    if (rows.isEmpty) return
+    val staging = s"$path.staging"
+    latestPerKey(rows.get, keys, versionCol)
+      .repartition(col(bucketCol))
+      .sortWithinPartitions(keys.map(col): _*)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(bucketCol)
+      .parquet(staging)
+    swapBuckets(fileSystem(spark, path), path, staging, buckets, bucketCol)
+  }
+
+  /** Swap each staged bucket in via old -> aside, staged -> live, drop
+    * aside, then drop the staging dir. The bucket's prior rows are on disk
+    * at every step: a crash between the renames leaves the old rows in
+    * `<table>.old-<bucket>` (outside the table root, so partition discovery
+    * never sees it), which [[healInterruptedSwaps]] restores, and
+    * checkpoint replay of the batch then converges via LWW dedup (ST5). A
+    * plain delete-then-rename would have a window where rows absent from
+    * the current batch are lost for good, because replay only re-runs the
+    * last micro-batch, not history.
+    */
+  private def swapBuckets(
+      fs: FileSystem,
+      path: String,
+      staging: String,
+      buckets: Seq[Long],
+      bucketCol: String): Unit = {
+    fs.mkdirs(new Path(path))
+    buckets.foreach { b =>
+      val src = new Path(s"$staging/$bucketCol=$b")
+      if (fs.exists(src)) {
+        val dst = new Path(s"$path/$bucketCol=$b")
+        val aside = new Path(s"$path.old-$b")
+        if (fs.exists(aside)) fs.delete(aside, true)
+        val hadOld = fs.exists(dst)
+        if (hadOld) fs.rename(dst, aside)
+        fs.rename(src, dst)
+        if (hadOld) fs.delete(aside, true)
+      }
+    }
+    fs.delete(new Path(staging), true)
   }
 
   /** Crash-recovery for the aside-rename swap: a swap interrupted between
@@ -290,11 +274,8 @@ object Load {
     * exists (the swap completed, the aside is stale). Idempotent, one
     * directory listing when no debris exists.
     */
-  def healInterruptedSwaps(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: String,
-      bucketCol: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
+  private def healInterruptedSwaps(fs: FileSystem, path: String, bucketCol: String): Unit = {
+    val root = new Path(path)
     val parent = root.getParent
     if (parent == null || !fs.exists(parent)) return
     val prefix = root.getName + ".old-"
@@ -302,30 +283,19 @@ object Load {
       val name = st.getPath.getName
       if (name.startsWith(prefix)) {
         val bucket = name.stripPrefix(prefix)
-        val live = new org.apache.hadoop.fs.Path(root, s"$bucketCol=$bucket")
+        val live = new Path(root, s"$bucketCol=$bucket")
         if (fs.exists(live)) fs.delete(st.getPath, true) // swap completed
         else { fs.mkdirs(root); fs.rename(st.getPath, live) } // swap lost
       }
     }
   }
 
-  /** Does `root` hold at least one `bucketCol=` partition directory? A bare
-    * or empty root (e.g. a crash between mkdirs and the first partition
-    * swap) must read as "no table yet", not as an unreadable parquet dir —
-    * the streaming replay then recreates it.
-    */
-  def hasPartitions(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      bucketCol: String): Boolean =
-    fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$bucketCol="))
+  private def touchedBuckets(incoming: DataFrame, bucketCol: String): Seq[Long] =
+    incoming.select(col(bucketCol).cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
 
-  def hasPartitions(
-      spark: org.apache.spark.sql.SparkSession, path: String, bucketCol: String): Boolean = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    hasPartitions(root.getFileSystem(spark.sparkContext.hadoopConfiguration), root, bucketCol)
-  }
+  private def fileSystem(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Bucketed + sorted catalog table: the co-located-join layout. Both
     * sides of a repeated equi-join (transactions ⋈ blocks on slot,
@@ -348,27 +318,5 @@ object Load {
     val sorted =
       if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*) else w
     sorted.saveAsTable(tableName)
-  }
-
-  /** S8 — atomic batch write: stage to a temp dir then swap, so a failed job
-    * never leaves a half-written table (the parquet analog of the
-    * reference's single wrapping DB transaction, load.rs:162/286).
-    */
-  def writeAtomic(df: DataFrame, path: String): Unit = {
-    val tmp = path + ".staging"
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    // Aside-rename rather than delete-then-rename: the previous table stays
-    // recoverable at every step even though a batch re-run would anyway
-    // regenerate the full output.
-    val aside = new org.apache.hadoop.fs.Path(path + ".old")
-    if (fs.exists(aside)) fs.delete(aside, true)
-    val hadOld = fs.exists(dst)
-    if (hadOld) fs.rename(dst, aside)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-    if (hadOld) fs.delete(aside, true)
   }
 }

@@ -101,16 +101,13 @@ object MergeSink {
 }
 
 /** Default sink: incremental upsert into a slot-range-partitioned parquet
-  * table under `rootDir/<table>`. `batch` must carry `bucketCol` and
-  * `versionCol` (the streaming pipeline stamps both).
+  * table under `rootDir/<table>`. `batch` must carry `slot_bucket` and
+  * `__version` (the streaming pipeline stamps both).
   */
-final class PartitionedParquetMergeSink(
-    rootDir: String,
-    bucketCol: String = "slot_bucket",
-    versionCol: String = "__version") extends MergeSink {
+final class PartitionedParquetMergeSink(rootDir: String) extends MergeSink {
 
   override def merge(batch: DataFrame, table: String, keys: Seq[String]): Unit =
-    Load.upsertPartitioned(batch, s"$rootDir/$table", keys, versionCol, bucketCol)
+    Load.upsertPartitioned(batch, s"$rootDir/$table", keys, "__version", "slot_bucket")
 }
 
 /** The reference-shaped JDBC target: per-partition connections, batched

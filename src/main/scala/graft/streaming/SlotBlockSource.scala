@@ -34,6 +34,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    required by the zero-egress environment; a live deployment swaps
   *    [[SlotRpc]] for an HTTP getBlock/getSlot client with the same
   *    interface.
+  *  - `maxRetries` (default 3) and `retryDelayMs` (default 2000): the
+  *    [[RetryingSlotRpc]] schedule for the driver's tip/listing calls and
+  *    every executor's block reads (`src/pipeline.rs:187-243`).
   *
   * Rows are `(slot LONG, value STRING)` raw JSON lines; downstream parsing
   * goes through [[graft.etl.Extract.parseBlocks]] so batch and streaming
@@ -102,8 +105,8 @@ final case class ConnectionInfo(
   */
 final class RetryingSlotRpc(
     inner: SlotRpc,
-    maxRetries: Int = 3,
-    delayMs: Long = 2000L,
+    val maxRetries: Int = 3,
+    val delayMs: Long = 2000L,
     sleeper: Long => Unit = Thread.sleep) extends SlotRpc {
   private def retry[T](f: => T): T =
     graft.util.Retry.withBackoff(maxRetries, delayMs, sleeper = sleeper)(f)
@@ -149,6 +152,10 @@ class SlotBlockTable(properties: Map[String, String]) extends Table with Support
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
 
+  /** Option lookup: Spark hands the options over with lower-cased keys. */
+  private def opt(name: String): Option[String] =
+    properties.get(name.toLowerCase).orElse(properties.get(name))
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new ScanBuilder {
       override def build(): Scan = new Scan {
@@ -157,16 +164,12 @@ class SlotBlockTable(properties: Map[String, String]) extends Table with Support
           new SlotBlockMicroBatchStream(
             new RetryingSlotRpc(
               new FileSlotRpc(path),
-              maxRetries = properties.getOrElse("maxretries",
-                properties.getOrElse("maxRetries", "3")).toInt),
+              maxRetries = opt("maxRetries").fold(3)(_.toInt),
+              delayMs = opt("retryDelayMs").fold(2000L)(_.toLong)),
             path,
-            finalityLag = properties.getOrElse("finalitylag",
-              properties.getOrElse("finalityLag", "20")).toLong,
-            maxSlotsPerTrigger =
-              properties.get("maxslotspertrigger").orElse(properties.get("maxSlotsPerTrigger"))
-                .map(_.toLong),
-            startSlot =
-              properties.get("startslot").orElse(properties.get("startSlot")).map(_.toLong))
+            finalityLag = opt("finalityLag").fold(20L)(_.toLong),
+            maxSlotsPerTrigger = opt("maxSlotsPerTrigger").map(_.toLong),
+            startSlot = opt("startSlot").map(_.toLong))
       }
     }
 }
@@ -179,7 +182,7 @@ case class SlotOffset(slot: Long) extends Offset {
 }
 
 class SlotBlockMicroBatchStream(
-    rpc: SlotRpc,
+    rpc: RetryingSlotRpc,
     dir: String,
     finalityLag: Long,
     maxSlotsPerTrigger: Option[Long],
@@ -235,7 +238,8 @@ class SlotBlockMicroBatchStream(
     // Contiguous chunks keep each task's reads sequential.
     val chunkSize = math.max(1, math.ceil(slots.size / 256.0).toInt)
     slots.grouped(chunkSize)
-      .map(chunk => SlotInputPartition(chunk.toArray, dir): InputPartition)
+      .map(chunk =>
+        SlotInputPartition(chunk.toArray, dir, rpc.maxRetries, rpc.delayMs): InputPartition)
       .toArray
   }
 
@@ -246,13 +250,18 @@ class SlotBlockMicroBatchStream(
   override def stop(): Unit = ()
 }
 
-case class SlotInputPartition(slots: Array[Long], dir: String) extends InputPartition
+/** One read task's slots, with the retry schedule its reader uses. */
+case class SlotInputPartition(
+    slots: Array[Long],
+    dir: String,
+    maxRetries: Int,
+    retryDelayMs: Long) extends InputPartition
 
 class SlotPartitionReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SlotInputPartition]
     new PartitionReader[InternalRow] {
-      private val rpc = new RetryingSlotRpc(new FileSlotRpc(p.dir))
+      private val rpc = new RetryingSlotRpc(new FileSlotRpc(p.dir), p.maxRetries, p.retryDelayMs)
       private val rows: Iterator[(Long, String)] = p.slots.iterator.flatMap { slot =>
         rpc.blockJson(slot).iterator.flatMap(_.split('\n')).filter(_.nonEmpty).map(slot -> _)
       }

@@ -20,17 +20,24 @@ import graft.etl.{EtlPipeline, Extract, Load, MergeSink, PartitionedParquetMerge
   */
 object StreamingPipeline {
 
-  /** ST1-ST3: the raw micro-batch block stream. */
+  /** ST1-ST3: the raw micro-batch block stream. `maxRetries` and
+    * `retryDelayMs` set the RPC retry schedule of the driver's calls and of
+    * every read task (ST4).
+    */
   def readBlockStream(
       spark: SparkSession,
       blocksDir: String,
       finalityLag: Long = 20L,
       maxSlotsPerTrigger: Option[Long] = None,
-      startSlot: Option[Long] = None): DataFrame = {
+      startSlot: Option[Long] = None,
+      maxRetries: Int = 3,
+      retryDelayMs: Long = 2000L): DataFrame = {
     val base = spark.readStream
       .format("slot-blocks")
       .option("path", blocksDir)
       .option("finalityLag", finalityLag.toString)
+      .option("maxRetries", maxRetries.toString)
+      .option("retryDelayMs", retryDelayMs.toString)
     val withMax = maxSlotsPerTrigger.fold(base)(n => base.option("maxSlotsPerTrigger", n.toString))
     startSlot.fold(withMax)(s => withMax.option("startSlot", s.toString)).load()
   }
@@ -55,55 +62,36 @@ object StreamingPipeline {
     * replayed signature (same block, same slot) always collides with its
     * prior version inside one bucket.
     */
-  /** Write-amplification note: `eagerDedup = true` (default) rewrites each
-    * touched bucket per batch — O(bucket) writes, right when batches are a
-    * sizable fraction of a bucket (backfill). For tail-following mode
-    * (small batches into a large live bucket) set `eagerDedup = false`:
-    * batches APPEND delta files (O(batch) writes) and buckets compact once
-    * they exceed a file-count threshold; readers take
-    * `Load.readDeduped(spark, path, keys, "__version")` for the LWW view
-    * of not-yet-compacted buckets (StreamingSpec pins the two modes land
-    * identical logical tables).
-    */
   def upsertBatch(
       batch: DataFrame,
       batchId: Long,
       tablesDir: String,
       bucketSize: Long = DefaultBucketSize,
-      eagerDedup: Boolean = true,
       sinkOverride: Option[MergeSink] = None): Unit = {
     val spark = batch.sparkSession
     val parsed = Extract.parseBlocks(batch.select("value")).cache()
     try {
       val r = EtlPipeline.run(spark, parsed)
-      val blocksPath = s"$tablesDir/blocks"
       def bucketOf(c: org.apache.spark.sql.Column) = floor(c / bucketSize).cast("long")
       // S9/J2: parent_slot survives only when the parent block is already
       // landed or arrives in this batch (load.rs:172-182 FK-safety probe).
       // The probe scan is partition-pruned to the buckets the incoming
-      // parents could live in — never a full pass over the landed table.
+      // parents could live in — never a full pass over the landed table —
+      // and reads through the merge's own heal-then-read, so a parent in a
+      // bucket an interrupted swap left aside still counts as landed.
       val parentBuckets: Seq[Long] = r.blocks
         .filter(col("parent_slot").isNotNull)
         .select(bucketOf(col("parent_slot")).as("b")).distinct()
         .collect().map(_.getLong(0)).toSeq
       val existingSlots =
-        if (Load.hasPartitions(spark, blocksPath, "slot_bucket") && parentBuckets.nonEmpty)
-          spark.read.parquet(blocksPath)
-            .withColumn("slot_bucket", col("slot_bucket").cast("long"))
-            .filter(col("slot_bucket").isin(parentBuckets: _*))
-            .select("slot")
-        else r.blocks.select("slot").limit(0)
+        Load.readBuckets(spark, s"$tablesDir/blocks", parentBuckets, "slot_bucket")
+          .getOrElse(r.blocks.limit(0))
+          .select("slot")
       // The sink seam (MergeSink): parquet by default; pass sinkOverride
       // to land the same batches in a database target (JdbcMergeSink's
       // Derby MERGE path is integration-tested; scalar-project first —
       // JDBC refuses array columns).
-      val sink: MergeSink = sinkOverride.getOrElse {
-        if (eagerDedup) new PartitionedParquetMergeSink(tablesDir)
-        else new MergeSink {
-          def merge(b: DataFrame, table: String, keys: Seq[String]): Unit =
-            Load.appendPartitioned(b, s"$tablesDir/$table", keys, "__version", "slot_bucket")
-        }
-      }
+      val sink = sinkOverride.getOrElse(new PartitionedParquetMergeSink(tablesDir))
       val blocks = Load.resolveParentSlots(r.blocks, existingSlots)
         .withColumn("slot_bucket", bucketOf(col("slot")))
         .withColumn("__version", lit(batchId))
@@ -126,13 +114,15 @@ object StreamingPipeline {
       trigger: Trigger = Trigger.AvailableNow(),
       startSlot: Option[Long] = None,
       bucketSize: Long = DefaultBucketSize,
-      eagerDedup: Boolean = true,
-      sinkOverride: Option[MergeSink] = None): StreamingQuery =
-    readBlockStream(spark, blocksDir, finalityLag, maxSlotsPerTrigger, startSlot)
+      sinkOverride: Option[MergeSink] = None,
+      maxRetries: Int = 3,
+      retryDelayMs: Long = 2000L): StreamingQuery =
+    readBlockStream(spark, blocksDir, finalityLag, maxSlotsPerTrigger, startSlot,
+      maxRetries, retryDelayMs)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, id: Long) =>
-        upsertBatch(batch, id, tablesDir, bucketSize, eagerDedup, sinkOverride))
+        upsertBatch(batch, id, tablesDir, bucketSize, sinkOverride))
       .trigger(trigger)
       .start()
 

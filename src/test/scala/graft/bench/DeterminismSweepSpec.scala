@@ -25,6 +25,11 @@ class DeterminismSweepSpec extends SparkTestBase {
   test("every registered query is shuffle-partitioning-deterministic") {
     val conf = spark.conf
     val original = conf.get("spark.sql.shuffle.partitions")
+    // AQE coalescing would shrink the final stages of both runs to the same
+    // partition count; off, each run really shuffles at its setting.
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val originalCoalesce = conf.get(coalesce)
+    conf.set(coalesce, "false")
     val mismatches = scala.collection.mutable.ListBuffer.empty[String]
     try {
       SparkEntry.allQueries.foreach { q =>
@@ -48,7 +53,10 @@ class DeterminismSweepSpec extends SparkTestBase {
           mismatches += s"${q.name}: $diff"
         }
       }
-    } finally conf.set("spark.sql.shuffle.partitions", original)
+    } finally {
+      conf.set("spark.sql.shuffle.partitions", original)
+      conf.set(coalesce, originalCoalesce)
+    }
     assert(mismatches.isEmpty,
       s"partitioning-dependent queries found:\n${mismatches.mkString("\n")}")
   }

@@ -2,7 +2,12 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.Trigger
+
 import graft.SparkTestBase
+import graft.streaming.{SlotInputPartition, StreamingPipeline}
 
 /** End-to-end CLI run over a file-backed slot directory. */
 class MainSpec extends SparkTestBase {
@@ -56,5 +61,30 @@ class MainSpec extends SparkTestBase {
     val slots = spark.read.parquet(s"$out/blocks")
       .select("slot").collect().map(_.getLong(0)).sorted
     assert(slots.toSeq == (120L to 130L))
+  }
+
+  test("--max-retries and --retry-delay reach the tip probe and every read task") {
+    val src = Files.createTempDirectory("cli-src4").toString
+    (100L to 107L).foreach(s =>
+      Files.writeString(Paths.get(src, s"$s.json"), blockJson(s)))
+    val Right(cfg) = Cli.parse(Seq("--max-retries", "5", "--retry-delay", "7")): @unchecked
+
+    val rpc = Main.slotRpc(cfg, src)
+    assert((rpc.maxRetries, rpc.delayMs) == ((5, 7000L)))
+
+    // The stream Main.run starts takes the probe's schedule; every input
+    // partition the source plans must carry it to its executor-side reader.
+    val q = StreamingPipeline.readBlockStream(spark, src, finalityLag = 0L,
+        maxRetries = rpc.maxRetries, retryDelayMs = rpc.delayMs)
+      .writeStream.format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("cli-ckpt4").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val planned = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution
+      .executedPlan.collect { case s: MicroBatchScanExec => s.inputPartitions }.flatten
+      .map(_.asInstanceOf[SlotInputPartition])
+    assert(planned.flatMap(_.slots).sorted.toSeq == (100L to 107L))
+    assert(planned.forall(p => p.maxRetries == 5 && p.retryDelayMs == 7000L))
   }
 }

@@ -95,14 +95,6 @@ class LoadSpec extends SparkTestBase {
     assert(dd == Seq((1L, "v2")))
   }
 
-  test("writeAtomic stages then swaps, and re-run overwrites cleanly (S8)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-load").toString + "/blocks"
-    Load.writeAtomic(Seq((1L, "a")).toDF("slot", "v"), dir)
-    assert(spark.read.parquet(dir).count() == 1)
-    Load.writeAtomic(Seq((1L, "a"), (2L, "b")).toDF("slot", "v"), dir)
-    assert(spark.read.parquet(dir).count() == 2)
-  }
-
   test("a swap interrupted between renames heals on the next operation") {
     // Simulate the crash window: old -> aside done, staged -> live never
     // happened. The bucket's live dir is gone; only the aside survives.
@@ -134,11 +126,10 @@ class LoadSpec extends SparkTestBase {
   }
 
   test("swaps leave no staging/aside debris next to the table") {
-    // The aside-rename dance (upsertPartitioned, compactBuckets,
-    // writeAtomic) stages SIBLING dirs of the table root; after a
-    // successful swap every one of them must be gone, or retries would
-    // resurrect stale data and partition discovery of a parent dir would
-    // see junk.
+    // The aside-rename dance (upsertPartitioned, compactBuckets) stages
+    // SIBLING dirs of the table root; after a successful swap every one of
+    // them must be gone, or retries would resurrect stale data and
+    // partition discovery of a parent dir would see junk.
     val root = java.nio.file.Files.createTempDirectory("graft-debris")
     val dir = root.toString + "/t"
     def batch(version: Long, slots: Long*) =
@@ -149,8 +140,7 @@ class LoadSpec extends SparkTestBase {
     Load.upsertPartitioned(batch(1L, 1L), dir, Seq("slot"), "__version", "slot_bucket")
     Load.appendPartitioned(batch(2L, 1L), dir, Seq("slot"), "__version", "slot_bucket",
       compactThreshold = 1)  // forces a compaction pass too
-    Load.writeAtomic(Seq((9L, "z")).toDF("slot", "v"), root.toString + "/atomic")
     val siblings = Option(root.toFile.listFiles()).toSeq.flatten.map(_.getName).toSet
-    assert(siblings == Set("t", "atomic"), s"unexpected debris: $siblings")
+    assert(siblings == Set("t"), s"unexpected debris: $siblings")
   }
 }

@@ -149,31 +149,56 @@ class StreamingSpec extends SparkTestBase {
     assert(parents == Map(11L -> 10L, 12L -> 11L))
   }
 
-  test("append-mode (LSM) landing: replay piles delta files, readDeduped matches eager mode") {
-    import graft.etl.Load
-    val src = tmpDir("src"); val tablesE = tmpDir("tE"); val tablesA = tmpDir("tA")
+  test("parent probe reads through the heal: a bucket left aside by a crash still counts") {
+    val src = tmpDir("src"); val tables = tmpDir("tables"); val ckpt = tmpDir("ckpt")
+    writeSlots(src, Seq(5L, 6L))
+    StreamingPipeline.start(spark, src, tables, ckpt, finalityLag = 0L).awaitTermination()
+    // The crash window of a bucket swap: old -> aside done, staged -> live not.
+    assert(new java.io.File(s"$tables/blocks/slot_bucket=0")
+      .renameTo(new java.io.File(s"$tables/blocks.old-0")))
+    writeSlots(src, Seq(7L))
+    StreamingPipeline.start(spark, src, tables, ckpt, finalityLag = 0L).awaitTermination()
+
+    val parents = spark.read.parquet(s"$tables/blocks")
+      .select("slot", "parent_slot").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    assert(parents.keySet == Set(5L, 6L, 7L)) // the aside was restored
+    assert(parents(7L).contains(6L))          // and its parent seen by the probe
+  }
+
+  test("a crash between the blocks and transactions merges replays to a clean run's tables") {
+    import graft.etl.{MergeSink, PartitionedParquetMergeSink}
+    val src = tmpDir("src")
     writeSlots(src, 1L to 10L)
-    StreamingPipeline.start(spark, src, tablesE, tmpDir("cE"), finalityLag = 0L,
-      bucketSize = 4L).awaitTermination()
-    StreamingPipeline.start(spark, src, tablesA, tmpDir("cA"), finalityLag = 0L,
-      bucketSize = 4L, eagerDedup = false).awaitTermination()
-    // Fresh checkpoint = full replay: append mode lands a second version of
-    // every row as new delta files (no bucket rewrite)...
-    StreamingPipeline.start(spark, src, tablesA, tmpDir("cA2"), finalityLag = 0L,
-      bucketSize = 4L, eagerDedup = false).awaitTermination()
-    val raw = spark.read.parquet(s"$tablesA/blocks")
-    assert(raw.count() == 20L, "replayed rows should coexist as deltas pre-compaction")
-    // ...and the LWW read view converges to exactly the eager-mode table.
-    val dedup = Load.readDeduped(spark, s"$tablesA/blocks", Seq("slot"), "__version")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("slot", "blockhash", "parent_slot", "block_height").collect()
-        .map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2), r.getLong(3))).toSet
-    assert(dedup.count() == 10L)
-    assert(canon(dedup) == canon(spark.read.parquet(s"$tablesE/blocks")))
-    val txDedup = Load.readDeduped(
-      spark, s"$tablesA/transactions", Seq("signature"), "__version")
-    assert(txDedup.count() == 10L)
+    def land(tables: String, ckpt: String, sink: MergeSink) =
+      StreamingPipeline.start(spark, src, tables, ckpt, finalityLag = 0L,
+        maxSlotsPerTrigger = Some(5L), sinkOverride = Some(sink)).awaitTermination()
+    val clean = tmpDir("clean")
+    land(clean, tmpDir("cclean"), new PartitionedParquetMergeSink(clean))
+
+    // Second batch: blocks merge lands, then the process dies before the
+    // transactions merge; the restart replays the batch from the checkpoint.
+    val crashed = tmpDir("crashed"); val ckpt = tmpDir("ccrashed")
+    val merges = new java.util.concurrent.atomic.AtomicInteger()
+    val inner = new PartitionedParquetMergeSink(crashed)
+    val crashing = new MergeSink {
+      def merge(b: org.apache.spark.sql.DataFrame, table: String, keys: Seq[String]): Unit = {
+        if (table == "transactions" && merges.incrementAndGet() == 2)
+          throw new IllegalStateException("crash between merges")
+        inner.merge(b, table, keys)
+      }
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](land(crashed, ckpt, crashing))
+    assert(spark.read.parquet(s"$crashed/transactions").count() == 5L) // batch 1's txs missing
+    land(crashed, ckpt, crashing)
+
+    def rows(tables: String, table: String) = // processed_at is wall-clock
+      spark.read.parquet(s"$tables/$table").drop("processed_at")
+        .collect().map(_.toString).sorted.toSeq
+    Seq("blocks", "transactions").foreach { t =>
+      assert(rows(crashed, t) == rows(clean, t), s"$t differs from the clean run")
+    }
+    assert(rows(clean, "blocks").size == 10 && rows(clean, "transactions").size == 10)
   }
 
   test("run stats from streaming progress (A3)") {
