@@ -1,9 +1,10 @@
 package graft.etl
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent load (SURVEY §2.1 S6-S9): the reference's
   * `INSERT ... ON CONFLICT (key) DO UPDATE` semantics — last write wins,
@@ -33,22 +34,19 @@ object Load {
       .drop("__rn")
   }
 
-  /** S9/J2 — parent-existence probe: keep `parent_slot` only when the parent
-    * block is present in the existing table or this batch (the reference
-    * probes the DB before each insert while looping slots ascending, so a
-    * parent earlier in the same batch counts — load.rs:172-182).
+  /** S9/J2 — parent-existence probe, resolved on the driver: a block's
+    * `parent_slot` survives only when the parent block is already landed or
+    * arrives in the same batch (the reference probes the DB before each
+    * insert while looping slots ascending, so a parent earlier in the same
+    * batch counts — load.rs:172-182). `blocks` are the batch's
+    * (slot, parent_slot) pairs; `landed` is called once, with exactly the
+    * parents outside the batch, and returns those already landed. Returns
+    * each block's resolved parent, in input order.
     */
-  def resolveParentSlots(incoming: DataFrame, existingSlots: DataFrame): DataFrame = {
-    val known = existingSlots.select(col("slot"))
-      .union(incoming.select(col("slot")))
-      .distinct()
-      .withColumnRenamed("slot", "__known_slot")
-    incoming
-      .join(known, incoming("parent_slot") === known("__known_slot"), "left")
-      .withColumn(
-        "parent_slot",
-        when(col("__known_slot").isNotNull, col("parent_slot")).otherwise(lit(null).cast("long")))
-      .drop("__known_slot")
+  def resolveParents(blocks: Seq[(Long, Option[Long])], landed: Seq[Long] => Set[Long]): Seq[Option[Long]] = {
+    val inBatch = blocks.map(_._1).toSet
+    val known = inBatch ++ landed(blocks.flatMap(_._2).distinct.filterNot(inBatch))
+    blocks.map(_._2.filter(known))
   }
 
   /** The reference's 19 B-tree indexes re-expressed as physical layout
@@ -176,37 +174,44 @@ object Load {
   }
 
   /** The landed rows of `buckets`, read after healing interrupted swaps —
-    * so a bucket a crash left aside reads as present, not as empty. The
-    * scan is partition-pruned to `buckets`; partition discovery types the
-    * bucket value as int, normalized here to long. None when no bucket is
-    * asked for or the table has no bucket directory yet (a bare or empty
-    * root, e.g. a crash between mkdirs and the first swap, reads as "no
-    * table yet", not as an unreadable parquet dir).
+    * so a bucket a crash left aside reads as present, not as empty. Only
+    * the requested `<bucketCol>=<b>` directories that exist are listed and
+    * read; `basePath` keeps `bucketCol` a column, whose discovered int type
+    * is normalized here to long. `dataSchema` (the table's columns without
+    * `bucketCol`) spares the footer-read job schema inference costs; None
+    * infers it. None when no requested bucket has a directory (a bare or
+    * empty root, e.g. a crash between mkdirs and the first swap, reads as
+    * "no rows yet", not as an unreadable parquet dir).
     */
   def readBuckets(
       spark: SparkSession,
       path: String,
       buckets: Seq[Long],
-      bucketCol: String): Option[DataFrame] = {
+      bucketCol: String,
+      dataSchema: Option[StructType] = None): Option[DataFrame] = {
     if (buckets.isEmpty) return None
     val fs = fileSystem(spark, path)
     healInterruptedSwaps(fs, path, bucketCol)
-    val root = new Path(path)
-    val landed = fs.exists(root) &&
-      fs.listStatus(root).exists(_.getPath.getName.startsWith(s"$bucketCol="))
-    if (!landed) None
-    else Some(spark.read.parquet(path)
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-      .filter(col(bucketCol).isin(buckets: _*)))
+    val dirs = buckets.distinct.map(b => s"$path/$bucketCol=$b").filter(d => fs.exists(new Path(d)))
+    if (dirs.isEmpty) None
+    else {
+      val reader = spark.read.option("basePath", path)
+      Some(dataSchema.fold(reader)(reader.schema).parquet(dirs: _*)
+        .withColumn(bucketCol, col(bucketCol).cast("long")))
+    }
   }
 
   /** The one bucket commit protocol. `buckets` of the table at `path` are
     * replaced by the LWW dedup of their landed rows ([[readBuckets]]) plus
     * `incoming`:
     *
-    *   1. heal interrupted swaps, then read only those buckets;
-    *   2. window-dedup on `keys`, one task (=> one file) per bucket, sorted
-    *      by key for parquet min/max skipping on point lookups;
+    *   1. heal interrupted swaps, then read only those buckets, under
+    *      `incoming`'s schema when there is one;
+    *   2. shuffle once on `bucketCol` (one task => one file per bucket),
+    *      then window-dedup on `(bucketCol, keys)` — the same groups as
+    *      `keys`, since the bucket is a function of the key. The window's
+    *      sort leaves each file sorted by key, for parquet min/max skipping
+    *      on point lookups, with no second sort;
     *   3. stage the result OUTSIDE the table root — a leftover dir under it
     *      would poison partition discovery;
     *   4. swap each staged bucket in ([[swapBuckets]]).
@@ -220,12 +225,14 @@ object Load {
       bucketCol: String,
       incoming: Option[DataFrame]): Unit = {
     if (buckets.isEmpty) return
-    val rows = (readBuckets(spark, path, buckets, bucketCol) ++ incoming).reduceOption(_.unionByName(_))
+    val landed = readBuckets(spark, path, buckets, bucketCol,
+      incoming.map(i => StructType(i.schema.filterNot(_.name == bucketCol))))
+    val rows = (landed ++ incoming).reduceOption(_.unionByName(_))
     if (rows.isEmpty) return
     val staging = s"$path.staging"
-    latestPerKey(rows.get, keys, versionCol)
-      .repartition(col(bucketCol))
-      .sortWithinPartitions(keys.map(col): _*)
+    val sortKeys = bucketCol +: keys
+    latestPerKey(rows.get.repartition(col(bucketCol)), sortKeys, versionCol)
+      .sortWithinPartitions(sortKeys.map(col): _*)
       .write.mode(SaveMode.Overwrite)
       .partitionBy(bucketCol)
       .parquet(staging)
@@ -290,9 +297,13 @@ object Load {
     }
   }
 
+  /** The distinct `bucketCol` values of `incoming`, in one job with no
+    * shuffle: distinct within each partition, merged on the driver.
+    */
   private def touchedBuckets(incoming: DataFrame, bucketCol: String): Seq[Long] =
-    incoming.select(col(bucketCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    incoming.select(col(bucketCol).cast("long")).as(Encoders.scalaLong)
+      .mapPartitions((it: Iterator[Long]) => it.toSet.iterator)(Encoders.scalaLong)
+      .collect().distinct.sorted.toSeq
 
   private def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.etl.{EtlPipeline, Extract, Load, MergeSink, PartitionedParquetMergeSink}
 
@@ -61,6 +64,12 @@ object StreamingPipeline {
     * table dwarfs the batch. Transactions bucket by `block_slot`, so a
     * replayed signature (same block, same slot) always collides with its
     * prior version inside one bucket.
+    *
+    * A batch's cost is mostly fixed per Spark job, so it runs few of them
+    * (8 for a 10-block batch into landed tables): one fills the parse cache
+    * and collects the block rows, one probes parents landed earlier, and
+    * each parquet merge runs three — its touched buckets, the shuffle and
+    * the write.
     */
   def upsertBatch(
       batch: DataFrame,
@@ -72,27 +81,36 @@ object StreamingPipeline {
     val parsed = Extract.parseBlocks(batch.select("value")).cache()
     try {
       val r = EtlPipeline.run(spark, parsed)
-      def bucketOf(c: org.apache.spark.sql.Column) = floor(c / bucketSize).cast("long")
+      def bucketOf(c: Column) = floor(c / bucketSize).cast("long")
+      // The same bucket as bucketOf, computed on the driver (double division).
+      def bucketOfSlot(slot: Long) = math.floor(slot.toDouble / bucketSize.toDouble).toLong
+      // One row per block, so at most maxSlotsPerTrigger rows; this job
+      // also fills the parse cache the transactions merge reads.
+      val rows = r.blocks.collect().toSeq
+      val parentIdx = r.blocks.schema.fieldIndex("parent_slot")
       // S9/J2: parent_slot survives only when the parent block is already
-      // landed or arrives in this batch (load.rs:172-182 FK-safety probe).
-      // The probe scan is partition-pruned to the buckets the incoming
-      // parents could live in — never a full pass over the landed table —
-      // and reads through the merge's own heal-then-read, so a parent in a
+      // landed or arrives in this batch (load.rs:172-182 FK-safety probe),
+      // resolved on the driver. Only parents outside the batch are probed,
+      // in one read pruned to their buckets and filtered to their slots.
+      // It reads through the merge's own heal-then-read, so a parent in a
       // bucket an interrupted swap left aside still counts as landed.
-      val parentBuckets: Seq[Long] = r.blocks
-        .filter(col("parent_slot").isNotNull)
-        .select(bucketOf(col("parent_slot")).as("b")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val existingSlots =
-        Load.readBuckets(spark, s"$tablesDir/blocks", parentBuckets, "slot_bucket")
-          .getOrElse(r.blocks.limit(0))
-          .select("slot")
+      def landed(slots: Seq[Long]): Set[Long] =
+        Load.readBuckets(spark, s"$tablesDir/blocks", slots.map(bucketOfSlot), "slot_bucket",
+          Some(StructType(Seq(StructField("slot", LongType)))))
+          .fold(Set.empty[Long])(_.filter(col("slot").isin(slots: _*)).select("slot")
+            .collect().map(_.getLong(0)).toSet)
+      val parents = Load.resolveParents(
+        rows.map(b => b.getAs[Long]("slot") -> Option(b.getAs[java.lang.Long](parentIdx)).map(_.longValue)),
+        landed)
+      val resolved = rows.zip(parents).map { case (b, p) =>
+        Row.fromSeq(b.toSeq.updated(parentIdx, p.fold[Any](null)(identity)))
+      }
       // The sink seam (MergeSink): parquet by default; pass sinkOverride
       // to land the same batches in a database target (JdbcMergeSink's
       // Derby MERGE path is integration-tested; scalar-project first —
       // JDBC refuses array columns).
       val sink = sinkOverride.getOrElse(new PartitionedParquetMergeSink(tablesDir))
-      val blocks = Load.resolveParentSlots(r.blocks, existingSlots)
+      val blocks = spark.createDataFrame(resolved.asJava, r.blocks.schema)
         .withColumn("slot_bucket", bucketOf(col("slot")))
         .withColumn("__version", lit(batchId))
       sink.merge(blocks, "blocks", Seq("slot"))

@@ -2,6 +2,7 @@ package graft.etl
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkTestBase
 
@@ -27,19 +28,17 @@ class LoadSpec extends SparkTestBase {
   }
 
   test("parent probe: parent in batch kept, unknown parent nulled (S9/J2)") {
-    val incoming = Seq((1000L, 999L), (1001L, 1000L)).toDF("slot", "parent_slot")
-    val existing = Seq.empty[Long].toDF("slot")
-    val got = Load.resolveParentSlots(incoming, existing)
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
-    assert(got(1000L).isEmpty)      // slot 999 unknown -> NULL (FK safety)
-    assert(got(1001L).contains(1000L)) // parent in same batch -> kept
+    val probed = Seq.newBuilder[Long]
+    val got = Load.resolveParents(Seq(1000L -> Some(999L), 1001L -> Some(1000L)),
+      slots => { probed ++= slots; Set.empty })
+    assert(got(0).isEmpty)            // slot 999 unknown -> NULL (FK safety)
+    assert(got(1).contains(1000L))    // parent in same batch -> kept
+    assert(probed.result() == Seq(999L)) // only the parent outside the batch is probed
   }
 
   test("parent probe: parent in existing table kept") {
-    val incoming = Seq((1000L, 999L)).toDF("slot", "parent_slot")
-    val existing = Seq(999L).toDF("slot")
-    val got = Load.resolveParentSlots(incoming, existing).head
-    assert(got.getLong(1) == 999L)
+    val got = Load.resolveParents(Seq(1000L -> Some(999L)), _.toSet.intersect(Set(999L)))
+    assert(got.head.contains(999L))
   }
 
   test("upsertPartitioned's existing-slice read is partition-pruned") {
@@ -142,5 +141,60 @@ class LoadSpec extends SparkTestBase {
       compactThreshold = 1)  // forces a compaction pass too
     val siblings = Option(root.toFile.listFiles()).toSeq.flatten.map(_.getName).toSet
     assert(siblings == Set("t"), s"unexpected debris: $siblings")
+  }
+
+  private def bucketed(version: Long, slots: Long*): DataFrame =
+    slots.map(s => (s, s"v$version")).toDF("slot", "v")
+      .withColumn("slot_bucket", floor(col("slot") / 10).cast("long"))
+      .withColumn("__version", lit(version))
+
+  test("a rewritten bucket's file is sorted by key") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString + "/t"
+    // ~200 signatures in one bucket, arriving in shuffled order over
+    // several partitions; the landed file must read back in key order.
+    val sigs = new scala.util.Random(7).shuffle((0 until 200).map(i => f"sig_$i%04d"))
+    val incoming = sigs.zipWithIndex.map { case (s, i) => (s, i % 7 + 1L) }
+      .toDF("signature", "block_slot").repartition(8)
+      .withColumn("slot_bucket", floor(col("block_slot") / 10).cast("long"))
+      .withColumn("__version", lit(0L))
+    // AQE would coalesce this small shuffle into one partition, which comes
+    // out sorted by accident; a real batch's shuffle spans several.
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try Load.upsertPartitioned(incoming, dir, Seq("signature"), "__version", "slot_bucket")
+    finally spark.conf.set(coalesce, prev)
+    val files = new java.io.File(s"$dir/slot_bucket=0").listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(files.length == 1)
+    val landed = spark.read.parquet(files.head.getPath).select("signature")
+      .collect().map(_.getString(0)).toSeq
+    assert(landed == sigs.sorted)
+  }
+
+  test("readBuckets skips a requested bucket that has no directory") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rb").toString + "/t"
+    Load.upsertPartitioned(bucketed(0L, 1L, 11L), dir, Seq("slot"), "__version", "slot_bucket")
+    val dataSchema = Some(StructType(bucketed(0L).schema.filterNot(_.name == "slot_bucket")))
+    val got = Load.readBuckets(spark, dir, Seq(1L, 5L), "slot_bucket", dataSchema).get
+    assert(got.select("slot", "slot_bucket").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      Seq((11L, 1L)))
+    assert(Load.readBuckets(spark, dir, Seq(5L), "slot_bucket", dataSchema).isEmpty)
+  }
+
+  test("readBuckets heals and reads a requested bucket a crash left aside") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rb").toString + "/t"
+    Load.upsertPartitioned(bucketed(0L, 1L, 11L), dir, Seq("slot"), "__version", "slot_bucket")
+    assert(new java.io.File(s"$dir/slot_bucket=1").renameTo(new java.io.File(s"$dir.old-1")))
+    val got = Load.readBuckets(spark, dir, Seq(1L), "slot_bucket",
+      Some(StructType(Seq(StructField("slot", LongType))))).get
+    assert(got.select("slot").collect().map(_.getLong(0)).toSeq == Seq(11L))
+    assert(!new java.io.File(s"$dir.old-1").exists())
+  }
+
+  test("readBuckets on a bare table root with no bucket directories is None") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-rb").toString + "/t"
+    assert(Load.readBuckets(spark, dir, Seq(0L), "slot_bucket").isEmpty) // no root at all
+    assert(new java.io.File(dir).mkdirs())
+    assert(Load.readBuckets(spark, dir, Seq(0L, 1L), "slot_bucket").isEmpty)
   }
 }

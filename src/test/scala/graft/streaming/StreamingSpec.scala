@@ -201,6 +201,38 @@ class StreamingSpec extends SparkTestBase {
     assert(rows(clean, "blocks").size == 10 && rows(clean, "transactions").size == 10)
   }
 
+  test("a 10-block batch into landed tables runs at most 8 Spark jobs, none a footer read") {
+    import org.apache.spark.graftbridge.ListenerBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val tables = tmpDir("tables")
+    def raw(slots: Seq[Long]) = slots.map(blockJson).toDF("value")
+    StreamingPipeline.upsertBatch(raw(1L to 10L), 0L, tables)
+    ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000L)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(js)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      StreamingPipeline.upsertBatch(raw(11L to 20L), 1L, tables) // slot 11's parent is landed
+      ListenerBridge.waitUntilEmpty(spark.sparkContext, 30000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // Every job of the batch runs inside a SQL query; schema inference's
+    // footer-read job (and a parallel file listing) runs outside one.
+    val described = jobs.asScala.toSeq.map { j =>
+      Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .fold("outside a query")(id => s"query $id") +
+        ": " + j.stageInfos.map(_.name).mkString("; ")
+    }
+    assert(described.size <= 8, described.mkString("\n"))
+    assert(!described.exists(_.startsWith("outside a query")), described.mkString("\n"))
+    val parent = spark.read.parquet(s"$tables/blocks").filter("slot = 11")
+      .select("parent_slot").head()
+    assert(parent.getLong(0) == 10L) // the landed parent was probed, not skipped
+  }
+
   test("run stats from streaming progress (A3)") {
     val src = tmpDir("src"); val tables = tmpDir("tables"); val ckpt = tmpDir("ckpt")
     writeSlots(src, 1L to 8L)
