@@ -1,10 +1,12 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Idempotent load (SURVEY §2.1 S6-S9): the reference's
   * `INSERT ... ON CONFLICT (key) DO UPDATE` semantics — last write wins,
@@ -74,11 +76,12 @@ object Load {
     * continuously-loaded table. The table is laid out as one directory per
     * `bucketCol` value (a slot-range bucket); a micro-batch then only
     * rewrites the buckets its rows touch ([[rewriteBuckets]]). Cost per
-    * batch is O(touched partitions), not O(table) — the parquet analog of
+    * batch is O(touched buckets), not O(table) — the parquet analog of
     * the reference's per-row `ON CONFLICT DO UPDATE` (load.rs:185-204),
     * where each conflict touches one B-tree page, not the relation.
     * Untouched partition directories are never rewritten (their files stay
-    * byte-identical).
+    * byte-identical). A batch whose keys are all new to the table can skip
+    * the read and the swap: [[appendPartitioned]].
     *
     * `incoming` must already carry `bucketCol` (derivable from the key) and
     * `versionCol`. Requires every duplicate of a key to land in the same
@@ -94,19 +97,23 @@ object Load {
     rewriteBuckets(incoming.sparkSession, path, touchedBuckets(incoming, bucketCol),
       keys, versionCol, bucketCol, Some(incoming.withColumn(bucketCol, col(bucketCol).cast("long"))))
 
-  /** LSM-style upsert for high-frequency micro-batches: append the batch's
-    * rows as NEW files in each touched bucket — O(batch) write cost,
-    * independent of bucket size — instead of rewriting the bucket
-    * ([[upsertPartitioned]], whose per-batch cost is O(bucket): fine when
-    * batches are a sizable fraction of a bucket, ruinous write
-    * amplification when a 10-slot tail-follow batch lands in a multi-GB
-    * bucket). Duplicate keys across a bucket's files are resolved
+  /** LSM-style landing: the batch's rows are written as NEW files in each
+    * touched bucket — O(batch), independent of bucket size — instead of
+    * rewriting the bucket ([[upsertPartitioned]], O(bucket)). The rows go
+    * through the same dedup-and-sort as a rewrite ([[writeLatest]]), so a
+    * key repeated within the batch lands once and each new file is sorted
+    * by key. `buckets` are the batch's touched buckets, which the caller
+    * knows (the streaming pipeline computes them from the slots it
+    * collected); no job finds them.
+    *
+    * The streaming pipeline appends only batches whose keys are all new to
+    * the table (its [[LandedMark]] rule). Otherwise duplicate keys across a
+    * bucket's files are resolved
     *
     *  - at read time by [[readDeduped]] (the LWW window over the bucket),
-    *  - physically by per-bucket compaction, triggered here whenever a
-    *    touched bucket exceeds `compactThreshold` files — so read
-    *    amplification is bounded and steady-state cost is
-    *    O(batch) + amortized O(bucket / threshold) per batch.
+    *  - physically by compaction of each of `buckets` that holds more than
+    *    `compactThreshold` files — so read amplification is bounded and
+    *    steady-state cost is O(batch) + amortized O(bucket / threshold).
     *
     * This is the parquet rendition of the LSM/delta-file pattern MERGE
     * table formats use (append deltas, compact in the background).
@@ -117,24 +124,19 @@ object Load {
       keys: Seq[String],
       versionCol: String,
       bucketCol: String,
+      buckets: Seq[Long],
       compactThreshold: Int = 16): Unit = {
+    if (buckets.isEmpty) return
     val spark = incoming.sparkSession
-    val touched = touchedBuckets(incoming, bucketCol)
-    if (touched.isEmpty) return
     val fs = fileSystem(spark, path)
     // Heal before appending: a live dir re-created by the append would make
     // a lost swap's aside look stale, and the next heal would drop it.
     healInterruptedSwaps(fs, path, bucketCol)
-    incoming
-      .withColumn(bucketCol, col(bucketCol).cast("long"))
-      .repartition(col(bucketCol))
-      .sortWithinPartitions(keys.map(col): _*)
-      .write.mode(SaveMode.Append)
-      .partitionBy(bucketCol)
-      .parquet(path)
-    val overThreshold = touched.filter { b =>
+    writeLatest(incoming.withColumn(bucketCol, col(bucketCol).cast("long")), path,
+      keys, versionCol, bucketCol, SaveMode.Append)
+    val overThreshold = buckets.filter { b =>
       val dir = new Path(s"$path/$bucketCol=$b")
-      fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) > compactThreshold
+      fs.exists(dir) && fs.listStatus(dir).count(_.getPath.getName.endsWith(".parquet")) > compactThreshold
     }
     // All over-threshold buckets compact in ONE Spark job (partition-pruned
     // read, one output file per bucket), not a per-bucket job loop — the
@@ -201,20 +203,15 @@ object Load {
     }
   }
 
-  /** The one bucket commit protocol. `buckets` of the table at `path` are
+  /** The one bucket rewrite protocol. `buckets` of the table at `path` are
     * replaced by the LWW dedup of their landed rows ([[readBuckets]]) plus
     * `incoming`:
     *
     *   1. heal interrupted swaps, then read only those buckets, under
     *      `incoming`'s schema when there is one;
-    *   2. shuffle once on `bucketCol` (one task => one file per bucket),
-    *      then window-dedup on `(bucketCol, keys)` — the same groups as
-    *      `keys`, since the bucket is a function of the key. The window's
-    *      sort leaves each file sorted by key, for parquet min/max skipping
-    *      on point lookups, with no second sort;
-    *   3. stage the result OUTSIDE the table root — a leftover dir under it
-    *      would poison partition discovery;
-    *   4. swap each staged bucket in ([[swapBuckets]]).
+    *   2. dedup and write them ([[writeLatest]]), staged OUTSIDE the table
+    *      root — a leftover dir under it would poison partition discovery;
+    *   3. swap each staged bucket in ([[swapBuckets]]).
     */
   private def rewriteBuckets(
       spark: SparkSession,
@@ -230,13 +227,32 @@ object Load {
     val rows = (landed ++ incoming).reduceOption(_.unionByName(_))
     if (rows.isEmpty) return
     val staging = s"$path.staging"
-    val sortKeys = bucketCol +: keys
-    latestPerKey(rows.get.repartition(col(bucketCol)), sortKeys, versionCol)
-      .sortWithinPartitions(sortKeys.map(col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(bucketCol)
-      .parquet(staging)
+    writeLatest(rows.get, staging, keys, versionCol, bucketCol, SaveMode.Overwrite)
     swapBuckets(fileSystem(spark, path), path, staging, buckets, bucketCol)
+  }
+
+  /** The write both commits share ([[appendPartitioned]] in place,
+    * [[rewriteBuckets]] staged): shuffle once on `bucketCol` (one task =>
+    * one file per bucket), then window-dedup on `(bucketCol, keys)` — the
+    * same groups as `keys`, since the bucket is a function of the key. The
+    * window's sort leaves each file sorted by key, for parquet min/max
+    * skipping on point lookups, with no second sort. (A separate
+    * `sortWithinPartitions(keys)` would not survive: the writer's own sort
+    * on `bucketCol` replaces it.)
+    */
+  private def writeLatest(
+      rows: DataFrame,
+      dest: String,
+      keys: Seq[String],
+      versionCol: String,
+      bucketCol: String,
+      mode: SaveMode): Unit = {
+    val sortKeys = bucketCol +: keys
+    latestPerKey(rows.repartition(col(bucketCol)), sortKeys, versionCol)
+      .sortWithinPartitions(sortKeys.map(col): _*)
+      .write.mode(mode)
+      .partitionBy(bucketCol)
+      .parquet(dest)
   }
 
   /** Swap each staged bucket in via old -> aside, staged -> live, drop
@@ -295,6 +311,75 @@ object Load {
         else { fs.mkdirs(root); fs.rename(st.getPath, live) } // swap lost
       }
     }
+  }
+
+  /** A table's landing mark, the small file `<table>/_landed` (Spark's file
+    * index skips `_` names): the highest batch `version` and slot (`high`)
+    * landed in the table, and whether the landing that set them finished.
+    * A writer records the mark pending, already advanced, before its first
+    * data file, and committed after its last — the rule the Structured
+    * Streaming file sink follows (log the batch id before writing). So every
+    * landed row, even one a crashed append left behind, is at or below
+    * `high`, and a batch may append ([[appendPartitioned]]) only when its
+    * keys cannot collide with landed ones: the mark is committed, the batch
+    * is newer than `version` (not a replay) and its lowest slot is above
+    * `high`. Every other batch rewrites its buckets ([[upsertPartitioned]]).
+    */
+  final case class LandedMark(version: Long, high: Long, committed: Boolean) {
+    def admitsAppend(batchVersion: Long, lowSlot: Long): Boolean =
+      committed && batchVersion > version && lowSlot > high
+
+    /** The pending mark of landing batch `batchVersion`, up to `highSlot`. */
+    def advance(batchVersion: Long, highSlot: Long): LandedMark =
+      LandedMark(version max batchVersion, high max highSlot, committed = false)
+  }
+
+  object LandedMark {
+    /** The mark of a table with no rows: any batch may append. */
+    val Empty: LandedMark = LandedMark(Long.MinValue, Long.MinValue, committed = true)
+  }
+
+  private val MarkFile = "_landed"
+
+  /** The [[LandedMark]] of the table at `path`. A table without a mark file
+    * gets one from its rows: [[LandedMark.Empty]] when it holds none, else a
+    * pending mark at its highest `slotCol` (one read of that column) — a
+    * table landed before marks existed rewrites its next batch, which then
+    * commits a real mark.
+    */
+  def landedMark(spark: SparkSession, path: String, bucketCol: String, slotCol: String): LandedMark = {
+    val fs = fileSystem(spark, path)
+    val file = new Path(path, MarkFile)
+    if (fs.exists(file)) {
+      val in = fs.open(file)
+      val Array(version, high, state) =
+        try new String(in.readAllBytes(), UTF_8).trim.split(' ') finally in.close()
+      LandedMark(version.toLong, high.toLong, state == "committed")
+    } else {
+      healInterruptedSwaps(fs, path, bucketCol)
+      val root = new Path(path)
+      val buckets = if (!fs.exists(root)) Nil else fs.listStatus(root).toSeq
+        .map(_.getPath.getName).filter(_.startsWith(s"$bucketCol="))
+        .map(_.stripPrefix(s"$bucketCol=").toLong)
+      readBuckets(spark, path, buckets, bucketCol, Some(StructType(Seq(StructField(slotCol, LongType)))))
+        .flatMap(rows => Option(rows.agg(max(col(slotCol))).head().getAs[java.lang.Long](0)))
+        .fold(LandedMark.Empty)(high => LandedMark(Long.MinValue, high, committed = false))
+    }
+  }
+
+  /** Record `mark` for the table at `path`: written aside, then renamed
+    * over the old mark, so a reader sees the old mark or the new one.
+    */
+  def writeMark(spark: SparkSession, path: String, mark: LandedMark): Unit = {
+    val fs = fileSystem(spark, path)
+    val file = new Path(path, MarkFile)
+    val tmp = new Path(path, s"$MarkFile.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(s"${mark.version} ${mark.high} ${if (mark.committed) "committed" else "pending"}"
+      .getBytes(UTF_8))
+    finally out.close()
+    FileContext.getFileContext(fs.getUri, spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, file, Options.Rename.OVERWRITE)
   }
 
   /** The distinct `bucketCol` values of `incoming`, in one job with no

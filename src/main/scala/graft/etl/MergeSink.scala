@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
   * the Spark pipeline, so the streaming path is sink-agnostic:
   *
   *  - [[PartitionedParquetMergeSink]] — the default in this environment:
-  *    slot-range-partitioned parquet with incremental window-dedup
-  *    ([[Load.upsertPartitioned]]).
+  *    slot-range-partitioned parquet, merged by incremental window-dedup
+  *    ([[Load.upsertPartitioned]]) and appended as new bucket files
+  *    ([[Load.appendPartitioned]]).
   *  - [[JdbcMergeSink]] — the reference's actual target shape: per-partition
   *    batched upsert statements, dialect-selected from the URL. The
   *    Postgres form is the reference's own `ON CONFLICT` text
@@ -26,6 +27,14 @@ trait MergeSink extends Serializable {
     * key after the call, re-delivery of the same batch converges (LWW).
     */
   def merge(batch: DataFrame, table: String, keys: Seq[String]): Unit
+
+  /** Land `batch`, whose keys the caller knows are all new to `table`, into
+    * `buckets` (its distinct `slot_bucket` values). A sink that can skip the
+    * conflict check overrides this; the default merges, which is correct
+    * whatever the keys.
+    */
+  def append(batch: DataFrame, table: String, keys: Seq[String], buckets: Seq[Long]): Unit =
+    merge(batch, table, keys)
 }
 
 object MergeSink {
@@ -108,6 +117,9 @@ final class PartitionedParquetMergeSink(rootDir: String) extends MergeSink {
 
   override def merge(batch: DataFrame, table: String, keys: Seq[String]): Unit =
     Load.upsertPartitioned(batch, s"$rootDir/$table", keys, "__version", "slot_bucket")
+
+  override def append(batch: DataFrame, table: String, keys: Seq[String], buckets: Seq[Long]): Unit =
+    Load.appendPartitioned(batch, s"$rootDir/$table", keys, "__version", "slot_bucket", buckets)
 }
 
 /** The reference-shaped JDBC target: per-partition connections, batched

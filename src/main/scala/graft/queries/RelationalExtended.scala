@@ -326,6 +326,7 @@ object RelationalExtended {
     // the file threshold at least twice and compacts mid-sequence; the
     // readDeduped view must still be exact last-write-wins. Batches carry
     // ascending versions; later batches rewrite overlapping key slices.
+    // Every batch passes all 16 possible buckets (o_orderkey % 16).
     Q(
       "q24_lsm_append_compact",
       (s, dir) => {
@@ -357,7 +358,7 @@ object RelationalExtended {
             .withColumn("version", lit(4L)))
         batches.foreach(b =>
           graft.etl.Load.appendPartitioned(
-            b, tmp, Seq("o_orderkey"), "version", "slot_bucket", compactThreshold = 2))
+            b, tmp, Seq("o_orderkey"), "version", "slot_bucket", 0L until 16L, compactThreshold = 2))
         graft.etl.Load.readDeduped(s, tmp, Seq("o_orderkey"), "version")
           .select("o_orderkey", "o_totalprice", "version")
           .orderBy("o_orderkey")

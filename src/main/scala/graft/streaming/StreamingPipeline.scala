@@ -47,7 +47,7 @@ object StreamingPipeline {
 
   /** Slots per landed partition directory. At ~2.5 blocks/s (Solana slot
     * cadence) one bucket is ~a week of chain; a micro-batch touches 1-2
-    * buckets, so the per-batch upsert cost is O(bucket), not O(table).
+    * buckets, so a batch that must rewrite costs O(bucket), not O(table).
     */
   val DefaultBucketSize = 1000000L
 
@@ -57,19 +57,27 @@ object StreamingPipeline {
     * `batchId` is the version stamp: monotonically increasing per
     * micro-batch, so a replayed batch deterministically supersedes itself.
     *
-    * Both tables are laid out as slot-range partitions (`slot_bucket`) and
-    * upserted incrementally: only partitions the batch touches are read,
-    * deduped and swapped (`Load.upsertPartitioned`) — the whole-table
-    * rewrite a naive union+window would do grinds to a halt once the landed
-    * table dwarfs the batch. Transactions bucket by `block_slot`, so a
-    * replayed signature (same block, same slot) always collides with its
-    * prior version inside one bucket.
+    * Both tables are laid out as slot-range partitions (`slot_bucket`);
+    * transactions bucket by `block_slot`, so a replayed signature (same
+    * block, same slot) always collides with its prior version inside one
+    * bucket. Each table lands the batch by one of two paths, picked from
+    * its [[Load.LandedMark]]:
+    *
+    *  - append (`MergeSink.append`, O(batch)): the batch's rows become new
+    *    files in its buckets. Taken when the batch is not a replay and all
+    *    its slots are above everything landed — the usual case, since the
+    *    source's offsets only move forward — so it has no key to dedup
+    *    against;
+    *  - rewrite (`MergeSink.merge`, O(touched buckets)): only the buckets
+    *    the batch touches are read, deduped with it and swapped
+    *    (`Load.upsertPartitioned`). Taken by a replay after a crash, by a
+    *    run over slots already landed, and by a table without a mark.
     *
     * A batch's cost is mostly fixed per Spark job, so it runs few of them
-    * (8 for a 10-block batch into landed tables): one fills the parse cache
-    * and collects the block rows, one probes parents landed earlier, and
-    * each parquet merge runs three — its touched buckets, the shuffle and
-    * the write.
+    * (5 for a 10-block batch appended to landed tables): one fills the parse
+    * cache and collects the block rows, and each append runs two, the
+    * shuffle and the write. Parents above the landed blocks' high slot
+    * resolve from the mark; only older ones cost a probe job.
     */
   def upsertBatch(
       batch: DataFrame,
@@ -87,21 +95,34 @@ object StreamingPipeline {
       // One row per block, so at most maxSlotsPerTrigger rows; this job
       // also fills the parse cache the transactions merge reads.
       val rows = r.blocks.collect().toSeq
+      if (rows.isEmpty) return
+      val slots = rows.map(_.getAs[Long]("slot"))
+      // Both tables' buckets: every transaction's block_slot is a batch slot.
+      val buckets = slots.map(bucketOfSlot).distinct.sorted
+      def mark(table: String, slotCol: String) =
+        Load.landedMark(spark, s"$tablesDir/$table", "slot_bucket", slotCol)
+      val blocksMark = mark("blocks", "slot")
       val parentIdx = r.blocks.schema.fieldIndex("parent_slot")
       // S9/J2: parent_slot survives only when the parent block is already
       // landed or arrives in this batch (load.rs:172-182 FK-safety probe),
-      // resolved on the driver. Only parents outside the batch are probed,
-      // in one read pruned to their buckets and filtered to their slots.
-      // It reads through the merge's own heal-then-read, so a parent in a
-      // bucket an interrupted swap left aside still counts as landed.
-      def landed(slots: Seq[Long]): Set[Long] =
-        Load.readBuckets(spark, s"$tablesDir/blocks", slots.map(bucketOfSlot), "slot_bucket",
-          Some(StructType(Seq(StructField("slot", LongType)))))
-          .fold(Set.empty[Long])(_.filter(col("slot").isin(slots: _*)).select("slot")
-            .collect().map(_.getLong(0)).toSet)
+      // resolved on the driver. A committed blocks mark answers for parents
+      // at or above its high slot: none above it landed, and the high slot
+      // itself did, unless it came from a crashed batch that was never
+      // replayed (the CLI's fixed checkpoint always replays one). Older
+      // parents outside the batch are probed in one read pruned to their
+      // buckets and filtered to their slots. It reads through the merge's
+      // own heal-then-read, so a parent in a bucket an interrupted swap
+      // left aside still counts as landed.
+      def landed(parents: Seq[Long]): Set[Long] = {
+        val (probed, answered) = parents.partition(p => !blocksMark.committed || p < blocksMark.high)
+        answered.filter(_ == blocksMark.high).toSet ++
+          Load.readBuckets(spark, s"$tablesDir/blocks", probed.map(bucketOfSlot), "slot_bucket",
+            Some(StructType(Seq(StructField("slot", LongType)))))
+            .fold(Set.empty[Long])(_.filter(col("slot").isin(probed: _*)).select("slot")
+              .collect().map(_.getLong(0)).toSet)
+      }
       val parents = Load.resolveParents(
-        rows.map(b => b.getAs[Long]("slot") -> Option(b.getAs[java.lang.Long](parentIdx)).map(_.longValue)),
-        landed)
+        slots.zip(rows.map(b => Option(b.getAs[java.lang.Long](parentIdx)).map(_.longValue))), landed)
       val resolved = rows.zip(parents).map { case (b, p) =>
         Row.fromSeq(b.toSeq.updated(parentIdx, p.fold[Any](null)(identity)))
       }
@@ -110,14 +131,24 @@ object StreamingPipeline {
       // Derby MERGE path is integration-tested; scalar-project first —
       // JDBC refuses array columns).
       val sink = sinkOverride.getOrElse(new PartitionedParquetMergeSink(tablesDir))
+      // Pending before the first data file, committed after the last: a
+      // crash in between leaves the table pending, so its replay rewrites.
+      def land(df: DataFrame, table: String, keys: Seq[String], prior: Load.LandedMark): Unit = {
+        val path = s"$tablesDir/$table"
+        val next = prior.advance(batchId, slots.max)
+        Load.writeMark(spark, path, next)
+        if (prior.admitsAppend(batchId, slots.min)) sink.append(df, table, keys, buckets)
+        else sink.merge(df, table, keys)
+        Load.writeMark(spark, path, next.copy(committed = true))
+      }
       val blocks = spark.createDataFrame(resolved.asJava, r.blocks.schema)
         .withColumn("slot_bucket", bucketOf(col("slot")))
         .withColumn("__version", lit(batchId))
-      sink.merge(blocks, "blocks", Seq("slot"))
+      land(blocks, "blocks", Seq("slot"), blocksMark)
       val txs = r.transactions
         .withColumn("slot_bucket", bucketOf(col("block_slot")))
         .withColumn("__version", lit(batchId))
-      sink.merge(txs, "transactions", Seq("signature"))
+      land(txs, "transactions", Seq("signature"), mark("transactions", "block_slot"))
     } finally parsed.unpersist()
   }
 

@@ -75,15 +75,15 @@ class LoadSpec extends SparkTestBase {
         .count(_.getName.endsWith(".parquet"))
     // Three appends of the same key: O(batch) writes, files accumulate...
     Load.appendPartitioned(batch(0L, 1L), dir, Seq("slot"), "__version", "slot_bucket",
-      compactThreshold = 2)
+      Seq(0L), compactThreshold = 2)
     Load.appendPartitioned(batch(1L, 1L), dir, Seq("slot"), "__version", "slot_bucket",
-      compactThreshold = 2)
+      Seq(0L), compactThreshold = 2)
     assert(bucketFiles(0L) == 2) // under threshold: pure appends, no rewrite
     assert(spark.read.parquet(dir).count() == 2) // both versions present raw
     // ...third append crosses the threshold: the bucket compacts to one
     // deduped file and the raw read IS the LWW view.
     Load.appendPartitioned(batch(2L, 1L), dir, Seq("slot"), "__version", "slot_bucket",
-      compactThreshold = 2)
+      Seq(0L), compactThreshold = 2)
     assert(bucketFiles(0L) == 1)
     val rows = spark.read.parquet(dir).select("slot", "v")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -138,7 +138,7 @@ class LoadSpec extends SparkTestBase {
     Load.upsertPartitioned(batch(0L, 1L, 11L), dir, Seq("slot"), "__version", "slot_bucket")
     Load.upsertPartitioned(batch(1L, 1L), dir, Seq("slot"), "__version", "slot_bucket")
     Load.appendPartitioned(batch(2L, 1L), dir, Seq("slot"), "__version", "slot_bucket",
-      compactThreshold = 1)  // forces a compaction pass too
+      Seq(0L), compactThreshold = 1)  // forces a compaction pass too
     val siblings = Option(root.toFile.listFiles()).toSeq.flatten.map(_.getName).toSet
     assert(siblings == Set("t"), s"unexpected debris: $siblings")
   }
@@ -148,10 +148,12 @@ class LoadSpec extends SparkTestBase {
       .withColumn("slot_bucket", floor(col("slot") / 10).cast("long"))
       .withColumn("__version", lit(version))
 
-  test("a rewritten bucket's file is sorted by key") {
+  /** Lands ~200 signatures in one bucket, arriving in shuffled order over
+    * several partitions, with `land(incoming, dir)`; the landed file must
+    * read back in key order.
+    */
+  private def assertLandsSorted(land: (DataFrame, String) => Unit): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString + "/t"
-    // ~200 signatures in one bucket, arriving in shuffled order over
-    // several partitions; the landed file must read back in key order.
     val sigs = new scala.util.Random(7).shuffle((0 until 200).map(i => f"sig_$i%04d"))
     val incoming = sigs.zipWithIndex.map { case (s, i) => (s, i % 7 + 1L) }
       .toDF("signature", "block_slot").repartition(8)
@@ -162,13 +164,31 @@ class LoadSpec extends SparkTestBase {
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     val prev = spark.conf.get(coalesce)
     spark.conf.set(coalesce, "false")
-    try Load.upsertPartitioned(incoming, dir, Seq("signature"), "__version", "slot_bucket")
+    try land(incoming, dir)
     finally spark.conf.set(coalesce, prev)
     val files = new java.io.File(s"$dir/slot_bucket=0").listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length == 1)
     val landed = spark.read.parquet(files.head.getPath).select("signature")
       .collect().map(_.getString(0)).toSeq
     assert(landed == sigs.sorted)
+  }
+
+  test("a rewritten bucket's file is sorted by key") {
+    assertLandsSorted(Load.upsertPartitioned(_, _, Seq("signature"), "__version", "slot_bucket"))
+  }
+
+  test("an appended bucket's file is sorted by key") {
+    assertLandsSorted(Load.appendPartitioned(_, _, Seq("signature"), "__version", "slot_bucket", Seq(0L)))
+  }
+
+  test("an append lands a key repeated within its batch once, the newest version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-append").toString + "/t"
+    val incoming = Seq((1L, "old", 1L), (1L, "new", 2L), (12L, "only", 1L)).toDF("slot", "v", "__version")
+      .withColumn("slot_bucket", floor(col("slot") / 10).cast("long"))
+    Load.appendPartitioned(incoming, dir, Seq("slot"), "__version", "slot_bucket", Seq(0L, 1L))
+    val got = spark.read.parquet(dir).select("slot", "v")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(got == Set((1L, "new"), (12L, "only")))
   }
 
   test("readBuckets skips a requested bucket that has no directory") {

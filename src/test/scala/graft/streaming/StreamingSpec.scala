@@ -115,9 +115,10 @@ class StreamingSpec extends SparkTestBase {
     assert(before.keys.exists(_.contains("slot_bucket=0")))
     assert(before.keys.exists(_.contains("slot_bucket=2")))
 
-    // Second batch: slots 11 (bucket 2) and 12 (bucket 3) — buckets 0 and 1
-    // of BOTH tables must not be rewritten (files byte-identical), bucket 2
-    // must be, bucket 3 is new.
+    // Second batch: slots 11 (bucket 2) and 12 (bucket 3), above every
+    // landed slot, so both tables append — buckets 0 and 1 of BOTH tables
+    // must not be rewritten (files byte-identical), bucket 2 gains one new
+    // file, bucket 3 is new.
     writeSlots(src, Seq(11L, 12L))
     StreamingPipeline.start(spark, src, tables, ckpt, finalityLag = 0L, bucketSize = 4L)
       .awaitTermination()
@@ -130,10 +131,18 @@ class StreamingSpec extends SparkTestBase {
     untouchedBefore.foreach { case (p, sig) =>
       assert(after.get(p).contains(sig), s"untouched partition file rewritten: $p")
     }
-    // Touched bucket 2 was rewritten (old file gone or content changed).
-    val touchedBefore = before.keys.filter(bucketOf(_).contains("2"))
+    // Touched bucket 2 was appended to: its old files are byte-identical,
+    // and each table's bucket 2 holds exactly one new file.
+    val touchedBefore = before.filter { case (p, _) => bucketOf(p).contains("2") }
     assert(touchedBefore.nonEmpty)
-    assert(touchedBefore.forall(p => !after.contains(p) || after(p) != before(p)))
+    touchedBefore.foreach { case (p, sig) =>
+      assert(after.get(p).contains(sig), s"appended-to partition file rewritten: $p")
+    }
+    Seq("blocks", "transactions").foreach { t =>
+      val added = after.keys.filter(p => p.contains(s"/$t/") && bucketOf(p).contains("2")).toSet --
+        touchedBefore.keys
+      assert(added.size == 1, s"$t bucket 2 new files: $added")
+    }
     // New bucket 3 exists and all 12 slots are present exactly once.
     assert(after.keys.exists(_.contains("slot_bucket=3")))
     val blocks = spark.read.parquet(s"$tables/blocks")
@@ -201,7 +210,7 @@ class StreamingSpec extends SparkTestBase {
     assert(rows(clean, "blocks").size == 10 && rows(clean, "transactions").size == 10)
   }
 
-  test("a 10-block batch into landed tables runs at most 8 Spark jobs, none a footer read") {
+  test("a 10-block batch into landed tables runs at most 5 Spark jobs, none a footer read") {
     import org.apache.spark.graftbridge.ListenerBridge
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
@@ -226,11 +235,128 @@ class StreamingSpec extends SparkTestBase {
         .fold("outside a query")(id => s"query $id") +
         ": " + j.stageInfos.map(_.name).mkString("; ")
     }
-    assert(described.size <= 8, described.mkString("\n"))
+    assert(described.size <= 5, described.mkString("\n"))
     assert(!described.exists(_.startsWith("outside a query")), described.mkString("\n"))
     val parent = spark.read.parquet(s"$tables/blocks").filter("slot = 11")
       .select("parent_slot").head()
-    assert(parent.getLong(0) == 10L) // the landed parent was probed, not skipped
+    assert(parent.getLong(0) == 10L) // the landed parent was resolved from the mark
+  }
+
+  /** The parquet sink, forwarding both landing paths and recording which
+    * one each table's batch took.
+    */
+  private class PathRecordingSink(tables: String) extends graft.etl.MergeSink {
+    private val inner = new graft.etl.PartitionedParquetMergeSink(tables)
+    private val taken = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    def merge(b: org.apache.spark.sql.DataFrame, table: String, keys: Seq[String]): Unit = {
+      taken.synchronized(taken += table -> "rewrite")
+      inner.merge(b, table, keys)
+    }
+    override def append(
+        b: org.apache.spark.sql.DataFrame, table: String, keys: Seq[String], buckets: Seq[Long]): Unit = {
+      taken.synchronized(taken += table -> "append")
+      inner.append(b, table, keys, buckets)
+    }
+    /** The paths taken since the last call. */
+    def paths(): Seq[(String, String)] = taken.synchronized {
+      val out = taken.toSeq; taken.clear(); out
+    }
+  }
+
+  private def both(path: String) = Seq("blocks" -> path, "transactions" -> path)
+
+  private def mark(tables: String, table: String) =
+    graft.etl.Load.landedMark(spark, s"$tables/$table", "slot_bucket",
+      if (table == "blocks") "slot" else "block_slot")
+
+  private def landedKeys(tables: String): (Seq[Long], Seq[String]) = (
+    spark.read.parquet(s"$tables/blocks").select("slot").collect().map(_.getLong(0)).sorted.toSeq,
+    spark.read.parquet(s"$tables/transactions").select("signature").collect().map(_.getString(0))
+      .sorted.toSeq)
+
+  test("a crash mid-append leaves the mark pending; the replay rewrites to a clean run's tables") {
+    import graft.etl.Load.LandedMark
+    val src = tmpDir("src")
+    writeSlots(src, 1L to 10L)
+    def land(tables: String, ckpt: String, sink: graft.etl.MergeSink) =
+      StreamingPipeline.start(spark, src, tables, ckpt, finalityLag = 0L,
+        maxSlotsPerTrigger = Some(5L), sinkOverride = Some(sink)).awaitTermination()
+    val clean = tmpDir("clean")
+    land(clean, tmpDir("cclean"), new PathRecordingSink(clean))
+
+    // Second batch: the blocks append writes half of its rows, then the
+    // process dies before the mark is committed.
+    val crashed = tmpDir("crashed"); val ckpt = tmpDir("ccrashed")
+    val blockAppends = new java.util.concurrent.atomic.AtomicInteger()
+    val crashing = new PathRecordingSink(crashed) {
+      override def append(
+          b: org.apache.spark.sql.DataFrame, table: String, keys: Seq[String], buckets: Seq[Long]): Unit =
+        if (table == "blocks" && blockAppends.incrementAndGet() == 2) {
+          super.append(b.filter("slot % 2 = 0"), table, keys, buckets)
+          throw new IllegalStateException("crash mid-append")
+        } else super.append(b, table, keys, buckets)
+    }
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](land(crashed, ckpt, crashing))
+    assert(crashing.paths() == both("append") :+ ("blocks" -> "append"))
+    assert(landedKeys(crashed)._1 == Seq(1L, 2L, 3L, 4L, 5L, 6L, 8L, 10L))
+    assert(mark(crashed, "blocks") == LandedMark(1L, 10L, committed = false))
+    assert(mark(crashed, "transactions") == LandedMark(0L, 5L, committed = true))
+
+    val replay = new PathRecordingSink(crashed)
+    land(crashed, ckpt, replay)
+    assert(replay.paths() == Seq("blocks" -> "rewrite", "transactions" -> "append"))
+    def rows(tables: String, table: String) = // processed_at is wall-clock
+      spark.read.parquet(s"$tables/$table").drop("processed_at")
+        .collect().map(_.toString).sorted.toSeq
+    Seq("blocks", "transactions").foreach { t =>
+      assert(rows(crashed, t) == rows(clean, t), s"$t differs from the clean run")
+      assert(mark(crashed, t) == LandedMark(1L, 10L, committed = true))
+    }
+  }
+
+  test("the same batchId applied twice rewrites and leaves one row per key") {
+    import spark.implicits._
+    val tables = tmpDir("tables"); val sink = new PathRecordingSink(tables)
+    val raw = (1L to 10L).map(blockJson).toDF("value")
+    StreamingPipeline.upsertBatch(raw, 0L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("append"))
+    StreamingPipeline.upsertBatch(raw, 0L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("rewrite"))
+    assert(landedKeys(tables) == ((1L to 10L).toSeq, (1L to 10L).map(s => s"sig_$s").sorted))
+  }
+
+  test("a new batchId over slots at or below the high-water slot rewrites, landing no duplicates") {
+    import spark.implicits._
+    val tables = tmpDir("tables"); val sink = new PathRecordingSink(tables)
+    def raw(slots: Seq[Long]) = slots.map(blockJson).toDF("value")
+    StreamingPipeline.upsertBatch(raw(1L to 10L), 0L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("append"))
+    StreamingPipeline.upsertBatch(raw(10L to 12L), 1L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("rewrite")) // its lowest slot is the high-water slot
+    assert(landedKeys(tables) == ((1L to 12L).toSeq, (1L to 12L).map(s => s"sig_$s").sorted))
+    assert(mark(tables, "blocks") == graft.etl.Load.LandedMark(1L, 12L, committed = true))
+    val parent = spark.read.parquet(s"$tables/blocks").filter("slot = 10").select("parent_slot").head()
+    assert(parent.getLong(0) == 9L) // a parent below the high slot is probed
+  }
+
+  test("a table with rows but no _landed mark rewrites, then appends under the mark it committed") {
+    import spark.implicits._
+    val tables = tmpDir("tables"); val sink = new PathRecordingSink(tables)
+    def raw(slots: Seq[Long]) = slots.map(blockJson).toDF("value")
+    StreamingPipeline.upsertBatch(raw(1L to 10L), 0L, tables, sinkOverride = Some(sink))
+    sink.paths()
+    // As landed before marks existed.
+    val fs = new org.apache.hadoop.fs.Path(tables).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq("blocks", "transactions").foreach { t =>
+      assert(fs.delete(new org.apache.hadoop.fs.Path(s"$tables/$t/_landed"), false))
+    }
+    StreamingPipeline.upsertBatch(raw(3L to 4L), 1L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("rewrite"))
+    // The committed mark's high slot comes from the landed rows.
+    assert(mark(tables, "transactions") == graft.etl.Load.LandedMark(1L, 10L, committed = true))
+    StreamingPipeline.upsertBatch(raw(11L to 12L), 2L, tables, sinkOverride = Some(sink))
+    assert(sink.paths() == both("append"))
+    assert(landedKeys(tables) == ((1L to 12L).toSeq, (1L to 12L).map(s => s"sig_$s").sorted))
   }
 
   test("run stats from streaming progress (A3)") {
